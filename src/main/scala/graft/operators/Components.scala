@@ -260,7 +260,7 @@ object Components {
     // `kept` is already canonical (lo < hi, distinct — anti-joins only drop
     // rows from the canonicalized `e`), so skip dedupClusters' re-canonical
     // distinct — one redundant full-edge-list shuffle (ADVICE r10).
-    // cutInput stays TRUE: the r12 A/B (CcProbe, warm) measured the no-cut
+    // cutInput stays TRUE: the r12 A/B (warm, OPTIMIZATION_r12.md §3) measured the no-cut
     // variant at round-0 9.3 s vs 1.4 s and 57 vs 33 jobs — AQE re-plans
     // the kept subtree (cache scan + anti-joins) per stage reference
     // instead of reusing it, so the eager cut's one job is the cheaper shape

@@ -6,16 +6,17 @@ import java.nio.charset.{Charset, StandardCharsets}
 import java.time.Duration
 import java.util.concurrent.ConcurrentHashMap
 
-/** Retry/redirect/timeout policy. Defaults mirror the reference's operational
+/** Retry/timeout policy. Defaults mirror the reference's operational
   * constants (erpl-web `src/include/http_client.hpp:90-97`): 30 s timeout,
-  * 3 retries starting at 100 ms with ×4 exponential backoff, 10 redirects.
+  * 3 retries starting at 100 ms with ×4 exponential backoff. Redirects are
+  * followed by the JDK client (`Redirect.NORMAL`, never HTTPS→HTTP) up to its
+  * own limit, the `jdk.httpclient.redirects.retrylimit` system property.
   */
 final case class HttpPolicy(
     timeoutMs: Long = 30000,
     retries: Int = 3,
     retryWaitMs: Long = 100,
     retryBackoff: Double = 4.0,
-    maxRedirects: Int = 10,
     cacheTtlMs: Long = 30000,
     cacheMaxEntries: Int = 256)
 

@@ -268,20 +268,8 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
       u.render
     }
     val http = graft.sources.http.HttpCore.shared
-    def fetchKeys(url: String, cap: Long): Seq[String] = {
-      val out = Seq.newBuilder[String]
-      var n = 0L
-      var next: Option[String] = Some(url)
-      while (next.isDefined && n < cap) {
-        val resp = http.get(next.get, auth = conf.auth, useCache = false)
-        if (resp.status != 200)
-          throw new RuntimeException(s"delete key fetch -> HTTP ${resp.status}")
-        val page = ODataJson.extractPage(ODataJson.parse(resp.text))
-        page.rows.foreach { row => out += row.get(key).asText; n += 1 }
-        next = page.nextLink
-      }
-      out.result()
-    }
+    def fetchKeys(url: String): Iterator[String] =
+      ODataPages.walk(url, conf.auth).flatMap(_.page.rows.map(_.get(key).asText))
     // size probe decides the path: filtered /$count when the server has it,
     // else a capped key fetch (threshold + 1 keys is itself bounded)
     val approxSize: Long = {
@@ -289,13 +277,12 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
         val u0 = ODataUrl.parse(meta.entitySetUrl + "/$count")
         compiled.expr.foldLeft(u0)((u, e) => u.mergeFilter(e)).render
       }
+      def cappedKeyCount: Long = fetchKeys(keysUrl(None))
+        .take(math.min(conf.bulkDeleteThreshold + 1, Int.MaxValue.toLong).toInt).size.toLong
       try {
         val resp = http.get(countUrl, auth = conf.auth, useCache = false)
-        if (resp.status == 200) resp.text.trim.toLong
-        else fetchKeys(keysUrl(None), conf.bulkDeleteThreshold + 1).length.toLong
-      } catch { case _: Exception =>
-        fetchKeys(keysUrl(None), conf.bulkDeleteThreshold + 1).length.toLong
-      }
+        if (resp.status == 200) resp.text.trim.toLong else cappedKeyCount
+      } catch { case _: Exception => cappedKeyCount }
     }
     def deleteSerial(keys: Seq[String]): Unit = keys.foreach { kv =>
       val lit = if (keyIsString) s"'${kv.replace("'", "''")}'" else kv
@@ -307,7 +294,7 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
       // interactive scale: collect ALL matching keys BEFORE deleting anything —
       // interleaving deletes with a $skip-paged walk shifts the remaining rows
       // under the pagination and silently skips ~half the matches. Keys only.
-      deleteSerial(fetchKeys(keysUrl(None), Long.MaxValue))
+      deleteSerial(fetchKeys(keysUrl(None)).toVector)
     } else {
       // bulk scale: never buffer the full key set. Repeatedly fetch the FIRST
       // page of remaining matches ($top, no $skip — so deleting cannot shift
@@ -316,11 +303,13 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
       // first key after its own page was "deleted" means the server is not
       // actually removing rows — abort instead of looping forever.
       val spark = org.apache.spark.sql.SparkSession.active
-      val pageSize = math.max(1L, conf.pageSize.map(_.toLong).getOrElse(1000L))
+      val pageSize = math.max(1, conf.pageSize.getOrElse(1000))
+      def firstKeys(): Vector[String] =
+        fetchKeys(keysUrl(Some(pageSize.toLong))).take(pageSize).toVector
       val (setUrl, bearer, user, password) = (meta.entitySetUrl, conf.bearer, conf.user, conf.password)
       val keyQuoted = keyIsString
       var prevFirst: Option[String] = None
-      var batch = fetchKeys(keysUrl(Some(pageSize)), pageSize)
+      var batch = firstKeys()
       while (batch.nonEmpty) {
         if (prevFirst.contains(batch.head))
           throw new RuntimeException(
@@ -335,7 +324,7 @@ class ODataTable(conf: ODataConf, schema: StructType) extends Table
           if (del.status >= 300)
             throw new RuntimeException(s"DELETE ($lit) -> HTTP ${del.status}")
         }
-        batch = fetchKeys(keysUrl(Some(pageSize)), pageSize)
+        batch = firstKeys()
       }
     }
   }
@@ -750,7 +739,7 @@ final case class ApplyAgg(rawFilter: Option[String], aggStage: String,
   * server-side in parallel, and Spark's final aggregate merges. */
 class ODataApplyScan(conf: ODataConf, meta: ODataMeta, agg: ApplyAgg)
   extends Scan with Batch {
-  @volatile private var preloadCache: Option[(Seq[String], Seq[Option[String]])] = None
+  private val preload = new FirstPagePreload(conf, meta)
   override def readSchema(): StructType = agg.schema
   override def toBatch: Batch = this
   override def description(): String =
@@ -765,18 +754,8 @@ class ODataApplyScan(conf: ODataConf, meta: ODataMeta, agg: ApplyAgg)
       }
     windows match {
       case Some(ws) =>
-        val urls = ws.map(w => ODataUrl.parse(meta.entitySetUrl)
-          .withParam("$apply", agg.pipelineWith(Some(w))).render)
-        val pages = preloadCache match { // planInputPartitions runs >1x
-          case Some((u, p)) if u == urls => p
-          case _ =>
-            val p = KeysetWindows.preloadFirstPages(conf, meta, urls)
-            preloadCache = Some((urls, p))
-            p
-        }
-        urls.zip(pages).zipWithIndex.map { case ((u, pg), i) =>
-          ODataInputPartition(u, i, pg): InputPartition
-        }.toArray
+        preload.partitions(ws.map(w => ODataUrl.parse(meta.entitySetUrl)
+          .withParam("$apply", agg.pipelineWith(Some(w))).render))
       case None =>
         // partial with no plannable windows degrades to one partition running
         // the whole pipeline — merging a single complete result is identity
@@ -968,24 +947,9 @@ class ODataScan(conf: ODataConf, meta: ODataMeta, schema: StructType,
     if (conf.skip.getOrElse(0L) + offset.map(_.toLong).getOrElse(0L) > 0) return None
     KeysetWindows.planWindows(conf, meta, ord,
         filterExpr.toSeq ++ runtimeExpr.toSeq, total)
-      .map { ws =>
-        val urls = ws.map(w => buildUrl(None, None, None, Some(w)))
-        // one `$batch` round-trip fetches every window's first page; cached
-        // because Spark calls planInputPartitions more than once per query
-        // (planning + execution) — re-keyed when runtime filters change urls
-        val pages = preloadCache match {
-          case Some((u, p)) if u == urls => p
-          case _ =>
-            val p = KeysetWindows.preloadFirstPages(conf, meta, urls)
-            preloadCache = Some((urls, p))
-            p
-        }
-        urls.zip(pages).zipWithIndex.map { case ((u, pg), i) =>
-          ODataInputPartition(u, i, pg): InputPartition
-        }.toArray
-      }
+      .map(ws => preload.partitions(ws.map(w => buildUrl(None, None, None, Some(w)))))
   }
-  @volatile private var preloadCache: Option[(Seq[String], Seq[Option[String]])] = None
+  private val preload = new FirstPagePreload(conf, meta)
 
   // runtime filter must shape the ranges too, or the $skip/$top windows
   // would be computed over the unfiltered set the pages no longer serve
@@ -1183,22 +1147,12 @@ private[odata] object KeysetWindows {
           if (desc) keys.map(_ + " desc").mkString(",") else keys.mkString(","))
         .withParam("$top", per.toString)
       if (v2) u = u.withParam("$format", "json")
-      val out = scala.collection.mutable.Buffer[Seq[String]]()
-      var next: Option[String] = Some(u.render)
-      while (next.isDefined && out.size < per) {
-        val resp = HttpCore.shared.get(next.get, useCache = false, auth = conf.auth)
-        if (resp.status != 200)
-          throw new RuntimeException(s"keyset sweep GET -> HTTP ${resp.status}")
-        val page = ODataJson.extractPage(ODataJson.parse(resp.text))
-        page.rows.foreach { n =>
-          val tuple = keys.indices.map { i =>
-            Option(n.get(keys(i))).filterNot(_.isNull).flatMap(renderKey(i, _))
-          }
-          if (tuple.forall(_.isDefined)) out += tuple.map(_.get)
+      ODataPages.walk(u.render, conf.auth).flatMap(_.page.rows).flatMap { n =>
+        val tuple = keys.indices.map { i =>
+          Option(n.get(keys(i))).filterNot(_.isNull).flatMap(renderKey(i, _))
         }
-        next = page.nextLink
-      }
-      out.take(math.min(per, Int.MaxValue.toLong).toInt).toSeq
+        if (tuple.forall(_.isDefined)) Some(tuple.map(_.get)) else None
+      }.take(math.min(per, Int.MaxValue.toLong).toInt).toVector
     }
     try {
       val boundaries = scala.collection.mutable.Buffer[Seq[String]]()
@@ -1351,23 +1305,15 @@ class ODataCountScan(conf: ODataConf, meta: ODataMeta, filterExpr: Option[String
           private def pageCount(auth: HttpAuth): Long = {
             var u = ODataUrl.parse(url.replace("/$count", ""))
             if (v2) u = u.withParam("$format", "json")
-            var next: Option[String] = Some(u.render)
-            var n = 0L
-            while (next.isDefined) {
-              val resp = HttpCore.shared.get(next.get, useCache = false, auth = auth)
-              if (resp.status != 200)
-                // some services reject query options on /$count yet serve
-                // filtered pages fine — that case succeeds here; if the pages
-                // ALSO 400, the pushed filter itself is the likely culprit
-                throw new RuntimeException(s"GET ${next.get} -> HTTP ${resp.status}" +
-                  pushedFilterStr.filter(_ => resp.status == 400)
-                    .map(f => s" (service may be rejecting the pushed filter: $f)")
-                    .getOrElse(""))
-              val page = ODataJson.extractPage(ODataJson.parse(resp.text))
-              n += page.rows.size
-              next = page.nextLink
+            try ODataPages.walk(u.render, auth).map(_.page.rows.size.toLong).sum
+            catch {
+              // some services reject query options on /$count yet serve
+              // filtered pages fine — that case succeeds here; if the pages
+              // ALSO 400, the pushed filter itself is the likely culprit
+              case e: ODataHttpException if e.status == 400 && pushedFilterStr.isDefined =>
+                throw new RuntimeException(s"${e.getMessage} (service may be " +
+                  s"rejecting the pushed filter: ${pushedFilterStr.get})", e)
             }
-            n
           }
           override def get(): InternalRow = row
           override def close(): Unit = ()
@@ -1381,6 +1327,27 @@ final case class ODataInputPartition(url: String, index: Int,
                                      preloaded: Option[String] = None)
   extends InputPartition
 
+/** Keyset-window partitions whose first pages arrive in one `$batch`
+  * round-trip ([[KeysetWindows.preloadFirstPages]]). Memoized because Spark
+  * calls planInputPartitions more than once per query (planning +
+  * execution); re-keyed when runtime filters change the urls. */
+private[odata] final class FirstPagePreload(conf: ODataConf, meta: ODataMeta) {
+  @volatile private var cache: Option[(Seq[String], Seq[Option[String]])] = None
+
+  def partitions(urls: Seq[String]): Array[InputPartition] = {
+    val pages = cache match {
+      case Some((u, p)) if u == urls => p
+      case _ =>
+        val p = KeysetWindows.preloadFirstPages(conf, meta, urls)
+        cache = Some((urls, p))
+        p
+    }
+    urls.zip(pages).zipWithIndex.map { case ((u, pg), i) =>
+      ODataInputPartition(u, i, pg): InputPartition
+    }.toArray
+  }
+}
+
 /** Everything shipped to executors must be small + serializable (SURVEY §7.4
   * item 5): URL, schema, auth material. The HTTP client is rebuilt lazily
   * executor-side. */
@@ -1393,52 +1360,32 @@ class ODataReaderFactory(schema: StructType, pageSize: Option[Int],
       schema, pageSize, HttpAuth(bearer, user, password), unwrap)
 }
 
-/** The executor-side paging loop (reference scan loop, SURVEY §3.1 step 4):
-  * GET page → decode rows → follow nextLink until exhausted. */
+/** The executor-side scan (reference scan loop, SURVEY §3.1 step 4): the
+  * partition's page walk, each page's rows decoded. A keyset-window
+  * partition's first page arrives preloaded from the driver-side `$batch`
+  * at planning and replaces the first GET. */
 class ODataPartitionReader(partition: ODataInputPartition, schema: StructType,
                            pageSize: Option[Int], auth: HttpAuth,
                            unwrap: Option[String] = None)
   extends PartitionReader[InternalRow] {
 
-  @transient private lazy val http = HttpCore.shared
-  private var nextUrl: Option[String] = Some(partition.url)
-  private var iter: Iterator[InternalRow] = Iterator.empty
   private var current: InternalRow = _
   private var pages = 0L
   private var rows = 0L
   private var bytes = 0L
-  // first page delivered at planning via one driver-side `$batch` POST
-  // (keyset-window scans): consume it instead of the first GET
-  private var preloaded: Option[String] = partition.preloaded
+  private val iter: Iterator[InternalRow] =
+    ODataPages.walk(partition.url, auth,
+      pageSize.map(n => "Prefer" -> s"odata.maxpagesize=$n").toMap, partition.preloaded)
+      .flatMap { p =>
+        pages += 1
+        bytes += p.response.body.length
+        p.page.rows.iterator.map { n =>
+          ODataJson.decodeRow(unwrap.map(ODataJson.unwrapNode(n, _)).getOrElse(n), schema)
+        }
+      }
 
-  override def next(): Boolean = {
-    while (!iter.hasNext && (nextUrl.isDefined || preloaded.isDefined)) fetchPage()
+  override def next(): Boolean =
     if (iter.hasNext) { current = iter.next(); rows += 1; true } else false
-  }
-
-  private def fetchPage(): Unit = {
-    val text = preloaded match {
-      case Some(body) =>
-        preloaded = None
-        bytes += body.length
-        body
-      case None =>
-        val url = nextUrl.get
-        val headers = pageSize.map(n => "Prefer" -> s"odata.maxpagesize=$n").toMap
-        val resp = http.get(url, headers = headers, auth = auth, useCache = false)
-        if (resp.status != 200)
-          throw new RuntimeException(s"GET $url -> HTTP ${resp.status}: ${resp.text.take(500)}")
-        bytes += resp.body.length
-        resp.text
-    }
-    pages += 1
-    val page = ODataJson.extractPage(ODataJson.parse(text))
-    iter = page.rows.iterator.map { n =>
-      val eff = unwrap.map(ODataJson.unwrapNode(n, _)).getOrElse(n)
-      ODataJson.decodeRow(eff, schema)
-    }
-    nextUrl = page.nextLink
-  }
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(ODataTaskMetric("odataPagesFetched", pages),

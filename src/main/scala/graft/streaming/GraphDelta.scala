@@ -9,7 +9,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.sources.http.{HttpAuth, HttpCore}
-import graft.sources.odata.ODataJson
+import graft.sources.odata.{ODataHttpException, ODataPages}
 
 /** Microsoft Graph delta-query CDC as a Structured Streaming source —
   * beyond reference (the reference reads Graph snapshots only; Graph's
@@ -95,26 +95,13 @@ class GraphDeltaClient(auth: HttpAuth = HttpAuth(),
     val files = Seq.newBuilder[String]
     var rowCount = 0L
     var pageIdx = 0
-    var next: Option[String] = Some(token.getOrElse(url))
     var newToken: Option[String] = None
-    var status = 0
-    var resyncedOnce = false
-    while (next.isDefined) {
-      val resp = http.get(next.get, headers = headers, auth = auth, useCache = false)
-      status = resp.status
-      if (resp.status == 410 && !resyncedOnce) {
-        // token expired: full resync from the server-provided restart URL
-        resyncedOnce = true
-        next = Some(resp.headers.get("location").getOrElse(url))
-      } else if (resp.status != 200) {
-        throw new RuntimeException(s"Graph delta GET ${next.get} -> HTTP ${resp.status}")
-      } else {
-        val root = ODataJson.parse(resp.text)
-        val page = ODataJson.extractPage(root)
-        if (page.rows.nonEmpty) {
+    def spill(start: String): Unit =
+      ODataPages.walk(start, auth, headers, http = http).foreach { p =>
+        if (p.page.rows.nonEmpty) {
           // tombstones: lift @removed.reason into a plain field before spill
           var removed = false
-          page.rows.foreach {
+          p.page.rows.foreach {
             case o: com.fasterxml.jackson.databind.node.ObjectNode if o.has("@removed") =>
               removed = true
               val reason = Option(o.get("@removed").get("reason"))
@@ -123,16 +110,21 @@ class GraphDeltaClient(auth: HttpAuth = HttpAuth(),
               o.put("removedReason", reason)
             case _ =>
           }
-          val body = if (removed) root.toString else resp.text
+          val body = if (removed) p.root.toString else p.text
           files += store.writePage(subId, batch, pageIdx, body)
           pageIdx += 1
-          rowCount += page.rows.size
+          rowCount += p.page.rows.size
         }
-        Option(root.get("@odata.deltaLink")).filter(!_.isNull)
+        Option(p.root.get("@odata.deltaLink")).filter(!_.isNull)
           .foreach(l => newToken = Some(l.asText))
-        next = page.nextLink
       }
+    try spill(token.getOrElse(url))
+    catch {
+      // token expired: one full resync from the server-provided restart URL
+      case e: ODataHttpException if e.status == 410 =>
+        spill(e.headers.getOrElse("location", url))
     }
-    OdpPagedResult(files.result(), rowCount, newToken, preferenceApplied = false, status)
+    // every page of a completed walk answered 200
+    OdpPagedResult(files.result(), rowCount, newToken, preferenceApplied = false, httpStatus = 200)
   }
 }

@@ -88,6 +88,15 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
   /** Ad-hoc routes: (method, path) -> body served as application/json. */
   val extraBodies = mutable.Map[(String, String), String]()
 
+  /** Looping pagination: GET `/loop/<path>` serves one row whose nextLink is
+    * `loopNext(path)`, or the path itself (a self-loop) when unmapped —
+    * `/loop/a` -> `/loop/b` -> `/loop/a` models an A->B->A cycle. After
+    * [[LoopBudget]] loop requests every loop route answers 500, so a client
+    * without a cycle guard fails instead of paging forever. */
+  val loopNext = mutable.Map[String, String]()
+  val LoopBudget = 50
+  @volatile var loopHits = 0
+
   private var server: HttpServer = _
   def port: Int = server.getAddress.getPort
   def serviceUrl: String = s"http://localhost:$port/svc"
@@ -178,6 +187,14 @@ class ODataStub(v2: Boolean, pageSize: Int = 5) {
       case p if extraBodies.synchronized { extraBodies.contains((ex.getRequestMethod, p)) } =>
         respond(ex, 200, "application/json",
           extraBodies.synchronized { extraBodies((ex.getRequestMethod, p)) })
+      case p if p.startsWith("/loop/") =>
+        val n = synchronized { loopHits += 1; loopHits }
+        if (n > LoopBudget) respond(ex, 500, "text/plain", s"loop budget spent after $LoopBudget")
+        else {
+          val next = loopNext.synchronized { loopNext.getOrElse(p, p) }
+          respond(ex, 200, "application/json",
+            s"""{"value":[{"id":"$n"}],"@odata.nextLink":"http://localhost:$port$next"}""")
+        }
       case "/svc/$metadata" =>
         respond(ex, 200, "application/xml", metadataXml)
       case "/svc/Customers/$count" =>
